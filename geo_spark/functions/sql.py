@@ -41,14 +41,6 @@ def parent(cid: Column, lvl: int) -> Column:
     return cid.bitwiseAND(F.lit(-l)).bitwiseOR(F.lit(l))
 
 
-def parent_dyn(cid: Column, lvl: Column) -> Column:
-    """Parent at a per-row level column.  pow(2,k) is exact for k <= 60
-    (powers of two are representable doubles), so the cast back to long
-    reproduces the uint64 mask bit-exactly."""
-    l = F.pow(F.lit(2.0), (2 * (F.lit(MAX_LEVEL) - lvl)).cast("double")).cast("long")
-    return cid.bitwiseAND(-l).bitwiseOR(l)
-
-
 def range_min(cid: Column) -> Column:
     """Smallest leaf id contained in the cell; s2/cellid.go:323-324."""
     return cid - (lsb(cid) - 1)
@@ -71,15 +63,6 @@ def is_leaf(cid: Column) -> Column:
 def face(cid: Column) -> Column:
     """Face 0..5 from a biased id: un-bias bit 63 then take the top 3 bits."""
     return F.shiftrightunsigned(cid.bitwiseXOR(F.lit(-(2**63))), 61).cast("int")
-
-
-def child_begin(cid: Column, lvl: int) -> Column:
-    """First descendant at the level; s2/cellid.go:400-404."""
-    return cid - lsb(cid) + F.lit(lsb_for_level(lvl))
-
-
-def child_end(cid: Column, lvl: int) -> Column:
-    return cid + lsb(cid) + F.lit(lsb_for_level(lvl))
 
 
 def next_cell(cid: Column) -> Column:

@@ -78,11 +78,6 @@ def with_geo_noise(df: DataFrame, id_col: str) -> DataFrame:
     ).withColumn("lng", F.expr(LNG_SQL.format(id=id_col)))
 
 
-def duckdb_geo_noise(id_col: str) -> tuple[str, str]:
-    """(lat_sql, lng_sql) for the DuckDB oracle — same formulas verbatim."""
-    return LAT_SQL.format(id=id_col), LNG_SQL.format(id=id_col)
-
-
 def local_latlng_sql(
     base_id: str, jitter_id: str, half_deg: float
 ) -> tuple[str, str]:

@@ -24,21 +24,6 @@ def loop_area_udf(verts: pd.Series) -> pd.Series:
     return pd.Series([M.loop_area(np.array(list(v), dtype=np.float64)) for v in verts])
 
 
-@F.pandas_udf(
-    T.StructType(
-        [
-            T.StructField("x", T.DoubleType()),
-            T.StructField("y", T.DoubleType()),
-            T.StructField("z", T.DoubleType()),
-        ]
-    )
-)
-def loop_centroid_udf(verts: pd.Series) -> pd.DataFrame:
-    rows = [M.loop_centroid(np.array(list(v), dtype=np.float64)) for v in verts]
-    arr = np.array(rows)
-    return pd.DataFrame({"x": arr[:, 0], "y": arr[:, 1], "z": arr[:, 2]})
-
-
 @F.pandas_udf(T.DoubleType())
 def polyline_length_udf(verts: pd.Series) -> pd.Series:
     return pd.Series(
@@ -57,22 +42,3 @@ def polygon_areas(loops_df: DataFrame) -> DataFrame:
         .agg(F.sum("_a").alias("area"), F.count(F.lit(1)).alias("n_loops"))
     )
 
-
-def polygon_centroids(loops_df: DataFrame) -> DataFrame:
-    """(polygon_id, x, y, z): hole-signed vector-centroid sum (normalize
-    downstream if a direction is wanted)."""
-    sign = F.when(F.col("depth") % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-    c = loop_centroid_udf(F.col("verts"))
-    return (
-        loops_df.withColumn("_c", c)
-        .select(
-            "polygon_id",
-            (F.col("_c.x") * sign).alias("cx"),
-            (F.col("_c.y") * sign).alias("cy"),
-            (F.col("_c.z") * sign).alias("cz"),
-        )
-        .groupBy("polygon_id")
-        .agg(
-            F.sum("cx").alias("x"), F.sum("cy").alias("y"), F.sum("cz").alias("z")
-        )
-    )

@@ -19,11 +19,12 @@ Scale design (the part the reference, being single-node, doesn't have):
   children (``split_hot_cells``) — a *semantic* salt: the children are
   still valid covering cells, so results are invariant to the split
   while the join keys fan out;
-- the refine is shuffle-free for dimension-table layers: regions ship
-  in the task closure and each Arrow batch runs one vectorized
-  predicate per geometry present (``mapInPandas``); huge layers fall
-  back to a broadcast-join + per-geometry grouped apply.  Never
-  per-row Python either way.
+- the refine is ONE shuffle-free ``mapInPandas`` over every candidate:
+  interior-cell rows pass as sure matches, the rest run one vectorized
+  predicate per geometry present in the Arrow batch.  Regions ship in
+  the task closure for dimension-table layers; huge layers attach
+  their blobs by a (broadcast) join instead.  The point side is read
+  and encoded once, and never per-row Python either way.
 """
 
 from __future__ import annotations
@@ -70,8 +71,7 @@ class Layer:
     """A prepared join target: geometry blobs + exploded covering table.
 
     ``regions`` (driver-side dict) is kept when the layer is small enough
-    to ship in task closures — the refine then runs as a shuffle-free
-    mapInPandas instead of a per-geometry grouped apply."""
+    to ship in task closures — the refine then needs no blob join."""
 
     MAX_CLOSURE_GEOMS = 20000
 
@@ -433,7 +433,7 @@ def spatial_join(
 ) -> DataFrame:
     """Join points to layer geometries.
 
-    Returns (point_key, carry..., geom_id) for ``how='inner'``; for
+    Returns (point_key, geom_id, carry...) for ``how='inner'``; for
     ``'left_semi'``/``'left_anti'`` returns the matching/non-matching
     point rows.  Exactness: candidate rows from non-interior covering
     cells are re-tested with the geometry's exact batch predicate
@@ -451,11 +451,7 @@ def spatial_join(
     # s2/cellunion.go:27-34), so a point's leaf lies in at most one of
     # them: (point, geom) candidate rows are already unique — no dedup
     # shuffle needed.
-    sure = cand.where(F.col("is_interior")).select(point_key, "geom_id", *carry)
-    unsure = cand.where(~F.col("is_interior"))
-
-    refined = _refine(unsure, layer, point_key, cell_col, carry, latlng)
-    matches = sure.unionByName(refined)
+    matches = _refine(cand, layer, point_key, cell_col, carry, latlng)
 
     if how == "inner":
         return matches
@@ -466,33 +462,41 @@ def spatial_join(
 
 
 def _refine(
-    unsure: DataFrame,
+    cand: DataFrame,
     layer: Layer,
     point_key: str,
     cell_col: str,
     carry: tuple[str, ...],
     latlng: tuple[str, str] | None,
 ) -> DataFrame:
-    """Exact containment of the non-interior candidates.
+    """One pass over every candidate: interior-cell rows are sure
+    matches, the rest take the geometry's exact batch predicate.
 
-    Fast path (layer fits in the closure): shuffle-free mapInPandas —
-    each Arrow batch is grouped by geom_id in-memory and hit with one
-    vectorized predicate per geometry present.  No extra shuffle, no
-    per-geometry group skew (dense-city geometries would otherwise pin
-    single tasks).  Huge layers take the same shape with the blobs
-    attached by a join instead of the closure: candidates stay in
-    their input-split partitions (broadcast blob join) or AQE splits
-    the skewed ones (shuffle blob join) — never a per-geometry keyed
-    group, so one dense-city geometry never pins one task."""
-    unsure = _ensure_parallelism(unsure)
-    if layer.regions is not None:
-        return _refine_closure(unsure, layer.regions, point_key, cell_col, carry, latlng)
-    joined = unsure.join(_geoms_for_join(layer), "geom_id")
+    A single shuffle-free mapInPandas: in each Arrow batch ``keep``
+    starts as ``is_interior`` and only the non-interior rows are grouped
+    by geom_id in-memory and hit with one vectorized predicate per
+    geometry present — no per-geometry keyed group, so one dense-city
+    geometry never pins one task.  The region comes from the task
+    closure when the layer fits there; huge layers attach blobs by a
+    left join on geom_id restricted to non-interior rows (interior rows
+    carry a null blob): candidates stay in their input-split partitions
+    (broadcast blob join) or AQE splits the skewed ones (shuffle blob
+    join)."""
+    # the matched covering cell is spent: keep it out of the Arrow hop
+    cand = _ensure_parallelism(cand.drop("cell", "level"))
+    regions = layer.regions
+    if regions is None:
+        g = _geoms_for_join(layer).withColumnRenamed("geom_id", "_blob_gid")
+        cand = cand.join(
+            g,
+            (cand["geom_id"] == g["_blob_gid"]) & ~cand["is_interior"],
+            "left",
+        ).drop("_blob_gid")
 
-    key_type = unsure.schema[point_key].dataType.simpleString()
-    carry_types = {c: unsure.schema[c].dataType.simpleString() for c in carry}
+    key_type = cand.schema[point_key].dataType.simpleString()
+    carry_types = {c: cand.schema[c].dataType.simpleString() for c in carry}
     schema = ", ".join(
-        ["geom_id long", f"{point_key} {key_type}"]
+        [f"{point_key} {key_type}", "geom_id long"]
         + [f"{c} {t}" for c, t in carry_types.items()]
     )
 
@@ -501,25 +505,27 @@ def _refine(
         for pdf in batches:
             if not len(pdf):
                 continue
-            pts = _points_xyz(pdf, cell_col, latlng)
             gids = pdf["geom_id"].to_numpy(np.int64)
-            blobs = pdf["blob"]
-            keep = np.zeros(len(pdf), dtype=bool)
-            for gid in np.unique(gids):
-                m = gids == gid
-                region = _cached_region(
-                    cache, int(gid), blobs.iloc[int(np.argmax(m))]
-                )
-                keep[m] = region.contains_points(pts[m])
-            out = {
-                "geom_id": gids[keep],
-                point_key: pdf[point_key].to_numpy()[keep],
-            }
+            keep = pdf["is_interior"].to_numpy(dtype=bool, copy=True)
+            todo = np.flatnonzero(~keep)
+            if len(todo):
+                pts = _points_xyz(pdf.iloc[todo], cell_col, latlng)
+                tg = gids[todo]
+                for gid in np.unique(tg):
+                    m = tg == gid
+                    if regions is not None:
+                        region = regions[int(gid)]
+                    else:
+                        region = _cached_region(
+                            cache, int(gid), pdf["blob"].iloc[todo[np.argmax(m)]]
+                        )
+                    keep[todo[m]] = region.contains_points(pts[m])
+            out = {point_key: pdf[point_key].to_numpy()[keep], "geom_id": gids[keep]}
             for c in carry:
                 out[c] = pdf[c].to_numpy()[keep]
             yield pd.DataFrame(out)
 
-    return joined.mapInPandas(fn, schema)
+    return cand.mapInPandas(fn, schema)
 
 
 def _points_xyz(pdf: pd.DataFrame, cell_col: str, latlng) -> np.ndarray:
@@ -533,39 +539,6 @@ def _points_xyz(pdf: pd.DataFrame, cell_col: str, latlng) -> np.ndarray:
     x, y, z = ck.cellid_to_xyz(cells)
     pts = np.stack([x, y, z], axis=1)
     return pts / np.sqrt((pts * pts).sum(axis=1))[:, None]
-
-
-def _refine_closure(
-    unsure: DataFrame,
-    regions: dict[int, Region],
-    point_key: str,
-    cell_col: str,
-    carry: tuple[str, ...],
-    latlng,
-) -> DataFrame:
-    key_type = unsure.schema[point_key].dataType.simpleString()
-    carry_types = {c: unsure.schema[c].dataType.simpleString() for c in carry}
-    schema = ", ".join(
-        ["geom_id long", f"{point_key} {key_type}"]
-        + [f"{c} {t}" for c, t in carry_types.items()]
-    )
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pts = _points_xyz(pdf, cell_col, latlng)
-            gids = pdf["geom_id"].to_numpy(np.int64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for gid in np.unique(gids):
-                m = gids == gid
-                keep[m] = regions[int(gid)].contains_points(pts[m])
-            out = {"geom_id": gids[keep], point_key: pdf[point_key].to_numpy()[keep]}
-            for c in carry:
-                out[c] = pdf[c].to_numpy()[keep]
-            yield pd.DataFrame(out)
-
-    return unsure.mapInPandas(fn, schema)
 
 
 def auto_salt_layer(

@@ -407,8 +407,9 @@ def bm25_scores(
     - tokenization is a split+explode projection; term filtering is an
       IN over the (small, literal) query-term list, so only matching
       tokens ever reach the aggregation;
-    - document frequencies and avg document length are two tiny
-      aggregates broadcast back (no second pass over tokens);
+    - document frequencies are a tiny aggregate broadcast back (no
+      second pass over tokens); corpus size and avg document length
+      come from one aggregate over the documents;
     - the score is one codegen expression per (doc, term), summed by a
       map-side-combined hash aggregate.  One token-table shuffle total.
 
@@ -427,13 +428,14 @@ def bm25_scores(
         .where(F.col("term").isin(terms))
     )
     tf = toks.groupBy(key, "term").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = docs.count()
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     dl = docs.select(
         F.col(key),
         F.size(F.split(F.lower(F.col(text_col)), r"\s+")).alias("dl"),
     )
-    avgdl = float(dl.agg(F.avg("dl")).collect()[0][0])
+    # corpus size and mean length from ONE pass over the documents
+    n_docs, avgdl = dl.agg(F.count(F.lit(1)), F.avg("dl")).first()
+    avgdl = float(avgdl)
     scored = (
         tf.join(F.broadcast(df_t), "term")
         .join(dl, key)

@@ -41,8 +41,18 @@ def test_spatial_join_broadcasts_dimension_covering(spark):
     plan = _plan_of(joined)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    # refine stays a shuffle-free arrow stage for closure layers
-    assert "MapInPandas" in plan
+    # one pass: the point side is read once and every candidate (sure
+    # or not) goes through the same single shuffle-free arrow refine
+    assert "Union" not in plan
+    assert plan.count("Range (") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+
+    # a semi-join reads points once for the refine and once for itself
+    semi = _plan_of(
+        spatial_join(ev, layer, point_key="pid", how="left_semi", latlng=("lat", "lng"))
+    )
+    assert semi.count("Range (") == 2, semi
+    assert semi.count("MapInPandas") == 1, semi
 
 
 def test_range_predicates_push_to_parquet_scan(spark, tmp_path):

@@ -182,22 +182,20 @@ def _as_distributed(layer):
     )
 
 
-def test_refine_fallback_matches_closure_and_is_deskewed(spark, points_df):
-    """The huge-layer refine fallback on a SKEWED fixture (one
-    near-global cap holds ~every candidate): results equal the closure
-    path, and the plan has no per-geometry keyed group — previously a
-    groupBy(geom_id).applyInPandas pinned the dense geometry to one
-    task."""
+def _check_refine_fallback(spark, points_df, interior):
     from geo_spark.operators.spatial_join import build_layer, spatial_join
 
     df, lat, lng = points_df
-    # interior=False forces EVERY candidate through the refine; the
+    # interior=False forces EVERY candidate through the exact test; the
     # 2-rad cap contains nearly all fixture points -> maximal skew.
     regions = [
         (1, Cap.from_center_angle(30.0, -30.0, 2.0)),
         (2, Cap.from_center_angle(48.85, 2.35, 0.01)),
     ]
-    layer = build_layer(spark, regions, max_cells=8, interior=False)
+    layer = build_layer(spark, regions, max_cells=8, interior=interior)
+    if interior:
+        n_int = layer.covering.where("is_interior").count()
+        assert 0 < n_int < layer.covering.count()
     forced = _as_distributed(layer)
 
     closure = {
@@ -210,9 +208,32 @@ def test_refine_fallback_matches_closure_and_is_deskewed(spark, points_df):
     got = {(r["pid"], r["geom_id"]) for r in joined.collect()}
     assert got == closure
     assert len(got) > 100
+    x, y, z = ck.latlng_to_xyz(lat, lng)
+    pts = np.stack([x, y, z], axis=1)
+    assert got == {
+        (int(pid), gid)
+        for gid, region in regions
+        for pid in np.nonzero(region.contains_points(pts))[0]
+    }
 
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
     assert "hashpartitioning(geom_id" not in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
+
+
+def test_refine_fallback_matches_closure_and_is_deskewed(spark, points_df):
+    """The huge-layer refine fallback on a SKEWED fixture (one
+    near-global cap holds ~every candidate): results equal the closure
+    path, and the plan has no per-geometry keyed group — previously a
+    groupBy(geom_id).applyInPandas pinned the dense geometry to one
+    task."""
+    _check_refine_fallback(spark, points_df, interior=False)
+
+
+def test_refine_fallback_passes_interior_rows_untested(spark, points_df):
+    """With interior cells, interior rows reach the same refine with a
+    null blob and must pass untested; results and plan shape match the
+    all-boundary case."""
+    _check_refine_fallback(spark, points_df, interior=True)

@@ -333,6 +333,18 @@ def test_changepoint_matches_python_reference(spark):
     flat = _ref_cp(tiles[(40.0, -100.0)])
     assert flat[3] == 0 and flat[2] == 0
 
+    # a signed daily series (a net-flow or delta count): the total is
+    # the series sum, not the largest prefix sum
+    from geo_spark.operators.tiling import changepoint_from_daily
+
+    signed = {0: 4, 1: 6, 2: -9, 3: 2}
+    daily = spark.createDataFrame(
+        [(7, d, c) for d, c in signed.items()], "qk long, day long, cnt long"
+    )
+    (r,) = changepoint_from_daily(daily).collect()
+    assert (r["n_days"], r["total"], r["cp_day"], r["cp_stat"]) == _ref_cp(signed)
+    assert r["total"] == 3
+
 
 def test_changepoint_randomized_differential(spark):
     import numpy as np
