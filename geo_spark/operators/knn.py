@@ -18,6 +18,22 @@ Mirrors the reference's adaptive strategy (s2/edge_query.go:414-489):
   (r * MinWidth(L), s2/metric.go:45-106) — every distance comparison is
   exact, so results equal the brute path (differential-tested).
 
+- **Broadcast-ring tier** between the two (up to
+  ``BROADCAST_RING_MAX_TARGETS`` targets): the same hop rings and
+  termination bound, walked task-locally with no shuffle.  The driver
+  indexes level-L cells densely (``cellid >> (61 - 2L)`` = face * 4**L
+  + pos, in cell-id order) and builds one int32 8-neighbor table over
+  all 6 * 4**L cells (6,144 rows at level 5, the auto level's ceiling;
+  98,304 rows = 3 MiB at ``BROADCAST_RING_MAX_LEVEL`` = 7) plus CSR
+  offsets of the cell-sorted targets, so every hop inside a task is an
+  array lookup.  ``knn_join`` sends an explicit level above 7 to the
+  ring path, which takes any level.
+
+The numpy tiers (brute, broadcast-ring, ``knn_regions``) pick top-k
+through :func:`_topk_order`, the one copy of the (distance, key)
+ordering rule: argpartition, then sort only the selected entries, with
+a full lexsort for rows tied at the k-th value.
+
 Distances are squared chord lengths (s2/point.go:141-146) computed as
 native Spark SQL float arithmetic after the joins — JVM codegen, not UDF.
 """
@@ -45,6 +61,10 @@ BRUTE_FORCE_MAX_TARGETS = 4096
 # task as numpy arrays (~40 B/target -> 20 MB at the cap), and the ring
 # expansion runs shuffle-free inside one mapInPandas pass
 BROADCAST_RING_MAX_TARGETS = 500_000
+# the closure-shipped tier walks a dense (6 * 4**L, 8) int32 neighbor
+# table: 3 MiB at this level, 12 MiB one level finer.  Finer explicit
+# levels take the distributed ring tier.
+BROADCAST_RING_MAX_LEVEL = 7
 # frontier x targets pairs below this finish as one broadcast GEMM
 _STRAGGLER_BRUTE_CELLS = 64_000_000
 
@@ -82,7 +102,9 @@ def knn_join(
     n_targets = targets.count()
     if n_targets <= BRUTE_FORCE_MAX_TARGETS:
         return _knn_brute(points, targets, k, point_key, target_key, latlng, t_latlng)
-    if n_targets <= BROADCAST_RING_MAX_TARGETS:
+    if n_targets <= BROADCAST_RING_MAX_TARGETS and (
+        level is None or level <= BROADCAST_RING_MAX_LEVEL
+    ):
         return _knn_broadcast_ring(
             points, targets, k, point_key, target_key, latlng, t_latlng, level
         )
@@ -99,6 +121,31 @@ def knn_join(
         stats=stats,
         straggler_brute_cells=straggler_brute_cells,
     )
+
+
+def _topk_order(d: np.ndarray, key: np.ndarray, kk: int) -> np.ndarray:
+    """(n, kk) column indices of each row's first kk entries in (d, key,
+    column) order: exactly ``np.lexsort((key, d), axis=1)[:, :kk]``
+    without sorting whole rows.  ``key`` is (C,) or (n, C).
+
+    argpartition picks kk columns per row.  When exactly kk entries of
+    a row are <= its kk-th value, those kk are the only possible top-k
+    set and only they are sorted (in column order first, so equal
+    (d, key) pairs keep lexsort's stable order).  Every other row --
+    ties at the kk-th value, inf padding, NaN -- takes the full
+    lexsort."""
+    key = np.broadcast_to(key, d.shape)
+    if kk == 0 or kk >= d.shape[1]:
+        return np.lexsort((key, d), axis=1)[:, :kk]
+    part = np.sort(np.argpartition(d, kk - 1, axis=1)[:, :kk], axis=1)
+    rows = np.arange(len(d))[:, None]
+    top_d = d[rows, part]
+    kth = top_d.max(axis=1)  # NaN when a NaN made the cut
+    out = part[rows, np.lexsort((key[rows, part], top_d), axis=1)]
+    slow = (d <= kth[:, None]).sum(axis=1) != kk
+    if slow.any():
+        out[slow] = np.lexsort((key[slow], d[slow]), axis=1)[:, :kk]
+    return out
 
 
 def _knn_brute(
@@ -151,10 +198,15 @@ def _knn_brute(
             d = pts[:, None, :] - tmat[None, :, :]
             chord2 = np.minimum((d * d).sum(axis=2), 4.0)  # (B,T)
             # top-k ascending with (chord2, tid) tie order
-            order = np.lexsort((np.broadcast_to(tids, chord2.shape), chord2), axis=1)
-            topk = order[:, :kk]
             if exact_ties:
-                topk = _resolve_tie_runs(pts, chord2, order, topk, kk, tmat, tids)
+                order = np.lexsort(
+                    (np.broadcast_to(tids, chord2.shape), chord2), axis=1
+                )
+                topk = _resolve_tie_runs(
+                    pts, chord2, order, order[:, :kk], kk, tmat, tids
+                )
+            else:
+                topk = _topk_order(chord2, tids, kk)
             b = len(pdf)
             out = pd.DataFrame(
                 {
@@ -232,17 +284,26 @@ def _knn_broadcast_ring(
 
     The reference's best-first search is per-query-point
     (s2/edge_query.go:527-568); here it is amortized per occupied
-    point-CELL and vectorized: targets ship to every task bucketed by
-    their level-L cell (sorted arrays + searchsorted, no dict), and one
-    mapInPandas pass walks hop rings per distinct cell, merging each
-    hop's candidates into running per-point top-k arrays until the
-    k-th distance is within the hop lower bound (hop * MinWidth(L),
+    point-CELL and vectorized.  The driver gives every level-L cell a
+    dense index (:func:`_dense_cell`, face * 4**L + pos, in cell-id
+    order), builds the 8-neighbor table of all 6 * 4**L cells in one
+    vectorized AllNeighbors call (:func:`_neighbor_table`, int32:
+    6,144 rows at level 5, 98,304 rows = 3 MiB at level 7, the
+    ``BROADCAST_RING_MAX_LEVEL`` cap), and buckets the targets by
+    dense cell as CSR offsets into the cell-sorted target arrays.  All
+    of it ships to every task in the closure.  One mapInPandas pass
+    then walks hop rings per distinct point-cell with array lookups
+    only: hop r+1 is the unique table rows of hop r minus a boolean
+    ``seen`` array, and each hop's targets come from the offsets.  Each
+    hop's candidates merge into running per-point top-k arrays until
+    the k-th distance is within the hop lower bound (hop * MinWidth(L),
     the same exact-termination rule as the distributed path).  ZERO
     shuffles, zero driver rounds — the plan is scan -> mapInPandas,
     identical in shape to the brute tier but with per-cell candidate
     pruning instead of all-pairs.  Cells whose expansion drags past
     ``max_seen_cells`` (isolated points in empty ocean) fall back to
-    the full target GEMM — the straggler switch, task-local.
+    every target outside the seen cells — the straggler switch,
+    task-local.
 
     Results are exact and equal the brute path: distances are the same
     float arithmetic, ties break by (chord2, tid), and bucketing
@@ -254,21 +315,32 @@ def _knn_broadcast_ring(
     n_targets = len(tids)
     if level is None:
         # Coarser than the distributed path's _auto_level on purpose:
-        # here the expansion loop is task-local Python, so the cost
-        # model inverts — per-CELL interpreter overhead dominates and
-        # per-candidate GEMM work is nearly free.  ~48 targets/cell
-        # keeps the per-task loop at O(100) iterations while each
-        # merge stays a single vectorized fold (A/B'd round 3:
-        # 25s -> ~3s at 100k points x 5000 targets vs _auto_level).
+        # the walk runs per occupied point-CELL in task-local Python, so
+        # each cell and hop costs a fixed interpreter overhead while the
+        # per-candidate distance work is one vectorized fold.  ~48
+        # targets/cell keeps the loop short; the level stays <= 5 up to
+        # BROADCAST_RING_MAX_TARGETS.
         level = max(
             0, min(30, int(np.log2(max(n_targets / (6 * 48), 1)) / 2))
         )
+    if level > BROADCAST_RING_MAX_LEVEL:
+        raise ValueError(
+            f"_knn_broadcast_ring: level {level} exceeds "
+            f"BROADCAST_RING_MAX_LEVEL={BROADCAST_RING_MAX_LEVEL} "
+            f"(the neighbor table holds 6 * 4**level rows); use _knn_ring"
+        )
     tx, ty, tz = ck.latlng_to_xyz(tlat, tlng)
-    tcell = ck.parent(ck.cellid_from_latlng(tlat, tlng), level)
-    order = np.argsort(tcell, kind="stable")
-    tcell_s = tcell[order]
+    tdense = _dense_cell(ck.cellid_from_xyz(tx, ty, tz), level)
+    order = np.argsort(tdense, kind="stable")
+    tdense = tdense[order]
     tmat = np.stack([tx, ty, tz], axis=1)[order]
     tids_s = tids[order]
+    nbr = _neighbor_table(level)
+    n_cells = len(nbr)
+    # CSR: the sorted targets of dense cell c are t_lo[c]:t_hi[c]
+    t_count = np.bincount(tdense, minlength=n_cells)
+    t_hi = np.cumsum(t_count)
+    t_lo = t_hi - t_count
     kk = min(k, n_targets)
     min_width = metric.MIN_WIDTH.value(level)
 
@@ -284,14 +356,11 @@ def _knn_broadcast_ring(
     schema = f"{point_key} {key_type}, {target_key} long, rank int"
 
     def targets_in(cells: np.ndarray) -> np.ndarray:
-        """Indices (into the sorted target arrays) bucketed in cells."""
-        lo = np.searchsorted(tcell_s, cells, side="left")
-        hi = np.searchsorted(tcell_s, cells, side="right")
-        if not len(lo):
-            return np.empty(0, dtype=np.int64)
-        return np.concatenate(
-            [np.arange(a, b) for a, b in zip(lo, hi)]
-        ) if (hi > lo).any() else np.empty(0, dtype=np.int64)
+        """Indices (into the sorted target arrays) bucketed in cells,
+        cell by cell: one arange shifted per CSR run."""
+        lo = t_lo[cells]
+        n = t_hi[cells] - lo
+        return np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
 
     def merge_topk(best_d, best_t, pts3, cand_idx):
         """Fold the candidate targets into the running (d, tid) top-k
@@ -301,7 +370,7 @@ def _knn_broadcast_ring(
         nt = np.broadcast_to(tids_s[cand_idx], nd.shape)
         alld = np.concatenate([best_d, nd], axis=1)
         allt = np.concatenate([best_t, nt], axis=1)
-        sel = np.lexsort((allt, alld), axis=1)[:, :kk]
+        sel = _topk_order(alld, allt, kk)
         rws = np.arange(len(alld))[:, None]
         return alld[rws, sel], allt[rws, sel]
 
@@ -312,27 +381,22 @@ def _knn_broadcast_ring(
                 pdf[latlng[1]].to_numpy(np.float64),
             )
             pmat = np.stack([x, y, z], axis=1)
-            pcell = ck.parent(ck.cellid_from_latlng(
-                pdf[latlng[0]].to_numpy(np.float64),
-                pdf[latlng[1]].to_numpy(np.float64),
-            ), level)
-            uniq, inv = np.unique(pcell, return_inverse=True)
+            pdense = _dense_cell(ck.cellid_from_xyz(x, y, z), level)
+            uniq, inv = np.unique(pdense, return_inverse=True)
+            # point rows of each distinct cell, ascending
+            groups = np.split(
+                np.argsort(inv, kind="stable"), np.cumsum(np.bincount(inv))[:-1]
+            )
             out_t = np.empty((len(pmat), kk), dtype=np.int64)
-            for ci, c in enumerate(uniq):
-                idx = np.nonzero(inv == ci)[0]
+            for c, idx in zip(uniq, groups):
                 pts3 = pmat[idx]
                 best_d = np.full((len(idx), kk), np.inf)
                 best_t = np.full((len(idx), kk), np.iinfo(np.int64).max)
                 # hops {0,1} up front: hop 0 alone can never terminate
-                ring = np.unique(
-                    np.concatenate([
-                        np.array([c], dtype=np.uint64),
-                        ck.all_neighbors_same_level(
-                            np.array([c], dtype=np.uint64)
-                        ).ravel(),
-                    ])
-                )
-                seen = set(int(v) for v in ring)
+                ring = np.unique(np.append(nbr[c], c))
+                seen = np.zeros(n_cells, dtype=bool)
+                seen[ring] = True
+                n_seen = len(ring)
                 cand = targets_in(ring)
                 n_seen_t = len(cand)
                 if len(cand):
@@ -346,29 +410,20 @@ def _knn_broadcast_ring(
                     )
                     if done.all() or n_seen_t >= n_targets:
                         break
-                    if len(seen) > max_seen_cells:
+                    if n_seen > max_seen_cells:
                         # straggler: finish against ALL remaining targets
-                        mask = np.ones(n_targets, dtype=bool)
-                        in_seen = np.isin(
-                            tcell_s, np.fromiter(seen, dtype=np.uint64)
-                        )
-                        mask[in_seen] = False
-                        rest = np.nonzero(mask)[0]
+                        rest = np.nonzero(~seen[tdense])[0]
                         if len(rest):
                             best_d, best_t = merge_topk(
                                 best_d, best_t, pts3, rest
                             )
                         break
-                    nbrs = np.unique(
-                        ck.all_neighbors_same_level(frontier).ravel()
-                    )
-                    nxt = np.array(
-                        [v for v in nbrs if int(v) not in seen],
-                        dtype=np.uint64,
-                    )
+                    nxt = np.unique(nbr[frontier])
+                    nxt = nxt[~seen[nxt]]
                     if not len(nxt):
                         break  # sphere exhausted
-                    seen.update(int(v) for v in nxt)
+                    seen[nxt] = True
+                    n_seen += len(nxt)
                     cand = targets_in(nxt)
                     n_seen_t += len(cand)
                     if len(cand):
@@ -386,6 +441,24 @@ def _knn_broadcast_ring(
             )
 
     return src.mapInPandas(fn, schema)
+
+
+def _dense_cell(cellid, level: int) -> np.ndarray:
+    """Dense index of the level-``level`` cell holding each cell id (any
+    level >= ``level``): ``cellid >> (61 - 2L)`` == face * 4**L + pos,
+    which keeps cell-id order."""
+    shift = np.uint64(ck.POS_BITS - 2 * level)
+    return (np.asarray(cellid, dtype=np.uint64) >> shift).astype(np.int64)
+
+
+def _neighbor_table(level: int) -> np.ndarray:
+    """(6 * 4**L, 8) int32 dense indices of every level-L cell's
+    same-level neighbors, from one vectorized AllNeighbors call
+    (face-wrap correct; a cube-corner row may repeat an entry)."""
+    shift = np.uint64(ck.POS_BITS - 2 * level)
+    dense = np.arange(ck.NUM_FACES << (2 * level), dtype=np.uint64)
+    cells = (dense << shift) | (np.uint64(1) << (shift - np.uint64(1)))
+    return _dense_cell(ck.all_neighbors_same_level(cells), level).astype(np.int32)
 
 
 def _dedup_topk(df: DataFrame, point_key: str, target_key: str, k: int) -> DataFrame:
@@ -701,8 +774,7 @@ def knn_regions(
             dmat = np.stack(
                 [distance_chord2(r, pts3) for _, r in regions], axis=1
             )  # (B, G)
-            order = np.lexsort((np.broadcast_to(gids, dmat.shape), dmat), axis=1)
-            topk = order[:, :kk]
+            topk = _topk_order(dmat, gids, kk)
             b = len(pdf)
             rows = np.arange(b)[:, None]
             yield pd.DataFrame(

@@ -19,7 +19,9 @@ internal checkpointed RDD, which the cache manager does not track —
 so :func:`free_local_checkpoint` reaches the ``LogicalRDD``'s RDD
 through the analyzed plan.  Guarded: a DataFrame whose analyzed plan
 is not a plain checkpoint scan (e.g. a lazy filter over one) is a
-no-op, as is any py4j surprise.
+no-op, as is any py4j surprise.  The return value says which happened
+(True only when blocks were released), so a Spark upgrade that moves
+``LogicalRDD`` fails a test instead of silently leaking.
 
 CONTRACT: only ever call on a table no consumer will touch again — a
 freed localCheckpoint cannot be recomputed (lineage is gone); a later
@@ -33,12 +35,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def free_local_checkpoint(df: DataFrame | None) -> None:
+def free_local_checkpoint(df: DataFrame | None) -> bool:
+    """Unpersist ``df``'s checkpointed RDD; True when it did, False for
+    None, any other plan class, or a swallowed py4j error."""
     if df is None:
-        return
+        return False
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return False
+        plan.rdd().unpersist(False)
+        return True
     except Exception:
-        pass
+        return False

@@ -20,10 +20,10 @@ by (ts_us, tiebreak_col) before linking — pass the same tie-break
 column the batch operator's order_cols uses (e.g. event_id) so rows
 sharing a timestamp link in the same order on both paths (ADVICE r4:
 without it, duplicate-ts fixes made drained==batch hold only for
-ts-unique traces).  With no tiebreak_col the fallback sort is
-(ts_us, site), deterministic but batch-equivalent only when ts is
-unique per user — that uniqueness is then a hard contract of this
-operator.  Ties SPLIT ACROSS micro-batches are unrecoverable by any
+ts-unique traces).  With no tiebreak_col, ts must be unique per user
+— a hard contract of this operator, ENFORCED per batch: a repeated
+ts_us for one user raises (failing the query) instead of silently
+linking in (ts_us, site) order.  Ties SPLIT ACROSS micro-batches are unrecoverable by any
 sort (state already consumed the earlier row); keeping equal-ts rows
 of one user in one batch is the ingest's responsibility, same as the
 asof rule.  The ts contract is ENFORCED: state carries the per-user
@@ -58,7 +58,8 @@ def stream_trail_edges(
     edge rows, one per site transition (u < v).  ``tiebreak_col``
     orders equal-ts rows within a batch exactly like the batch
     operator's second order column (e.g. event_id); omit it only when
-    ts is unique per user (see module docstring)."""
+    ts is unique per user — a batch repeating a user's ts then raises
+    (see module docstring)."""
     ila, iln = snap_site_cols(
         F.col(latlng[0]), F.col(latlng[1]), exponent
     )
@@ -87,6 +88,15 @@ def stream_trail_edges(
                 f"processed high-water mark {hw} — late data must replay "
                 f"through the batch trail_network_edges"
             )
+        if tiebreak_col is None:
+            dup = batch["ts_us"].duplicated()
+            if dup.any():
+                raise ValueError(
+                    f"stream_trail_edges: duplicate ts "
+                    f"{int(batch['ts_us'][dup].iloc[0])} for user "
+                    f"{key[0]!r} with no tiebreak_col — pass the batch "
+                    f"operator's second order column (e.g. event_id)"
+                )
         rows = []
         for ts, site in zip(batch["ts_us"], batch["site"]):
             site = int(site)

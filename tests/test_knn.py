@@ -327,3 +327,116 @@ def test_knn_join_routes_middle_tier(spark):
     finally:
         knn_mod.BRUTE_FORCE_MAX_TARGETS = orig
     assert got == _numpy_oracle(plat, plng, tlat, tlng, k)
+
+
+def _spark_rows(spark, key, lat, lng, order=None):
+    order = np.arange(len(lat)) if order is None else order
+    return spark.createDataFrame(
+        [(int(i), float(lat[i]), float(lng[i])) for i in order],
+        f"{key} long, lat double, lng double",
+    )
+
+
+def test_broadcast_ring_face_wrap_levels(spark):
+    # Level 0 has 6 cells, so every hop-1 ring wraps onto other faces;
+    # level 7 (BROADCAST_RING_MAX_LEVEL) is the finest the neighbor
+    # table serves.  Points and targets sit around the (1,1,1)/sqrt(3)
+    # corner where faces 0, 1 and 2 meet, so level-7 walks cross face
+    # edges at the corner.
+    from geo_spark.operators.knn import BROADCAST_RING_MAX_LEVEL, _knn_broadcast_ring
+
+    k = 3
+    rng = np.random.default_rng(51)
+    corner_lat = np.degrees(np.arctan(1.0 / np.sqrt(2.0)))
+    plat = corner_lat + rng.uniform(-1.0, 1.0, 150)
+    plng = 45.0 + rng.uniform(-1.0, 1.0, 150)
+    tlat = corner_lat + rng.uniform(-1.5, 1.5, 120)
+    tlng = 45.0 + rng.uniform(-1.5, 1.5, 120)
+    # a few far targets so level-0 rings must reach other faces
+    tlat = np.concatenate([tlat, [-60.0, 10.0, -5.0]])
+    tlng = np.concatenate([tlng, [-120.0, -170.0, 100.0]])
+    pts = _spark_rows(spark, "pid", plat, plng)
+    tg = _spark_rows(spark, "tid", tlat, tlng)
+    want = _numpy_oracle(plat, plng, tlat, tlng, k)
+    assert len(set(ck.face(ck.cellid_from_latlng(plat, plng)).tolist())) == 3
+    for level in (0, BROADCAST_RING_MAX_LEVEL):
+        got = {
+            (r["pid"], r["tid"], r["rank"])
+            for r in _knn_broadcast_ring(
+                pts, tg, k, "pid", "tid", ("lat", "lng"), ("lat", "lng"),
+                level=level,
+            ).collect()
+        }
+        assert got == want, level
+
+
+def test_knn_boundary_ties_rank_by_target_id(spark):
+    # Four targets per site share exact coordinates under distinct ids,
+    # fed in shuffled order, so the k-th distance ties for every point:
+    # the brute and broadcast-ring tiers must both rank the tie by id.
+    from geo_spark.operators.knn import _knn_broadcast_ring
+
+    k = 6
+    rng = np.random.default_rng(53)
+    slat = rng.uniform(-50, 50, 60)
+    slng = rng.uniform(-180, 180, 60)
+    tlat, tlng = np.repeat(slat, 4), np.repeat(slng, 4)
+    # half the points sit exactly on a site (chord2 0 four times over)
+    plat = np.concatenate([slat[:40], rng.uniform(-50, 50, 40)])
+    plng = np.concatenate([slng[:40], rng.uniform(-180, 180, 40)])
+    pts = _spark_rows(spark, "pid", plat, plng)
+    tg = _spark_rows(spark, "tid", tlat, tlng, order=rng.permutation(len(tlat)))
+    want = _numpy_oracle(plat, plng, tlat, tlng, k)
+
+    px, py, pz = ck.latlng_to_xyz(plat, plng)
+    tx, ty, tz = ck.latlng_to_xyz(tlat, tlng)
+    d = (
+        (np.stack([px, py, pz], 1)[:, None, :] - np.stack([tx, ty, tz], 1)[None])
+        ** 2
+    ).sum(axis=2)
+    srt = np.sort(d, axis=1)
+    assert (srt[:, k - 1] == srt[:, k]).all()  # every k-th distance ties
+
+    brute = {
+        (r["pid"], r["tid"], r["rank"])
+        for r in _knn_brute(
+            pts, tg, k, "pid", "tid", ("lat", "lng"), ("lat", "lng")
+        ).collect()
+    }
+    ring = {
+        (r["pid"], r["tid"], r["rank"])
+        for r in _knn_broadcast_ring(
+            pts, tg, k, "pid", "tid", ("lat", "lng"), ("lat", "lng"), level=4
+        ).collect()
+    }
+    assert brute == want
+    assert ring == want
+
+
+def test_topk_order_matches_full_lexsort():
+    # Spark-free: the partition-then-sort top-k must return exactly the
+    # first kk columns of the full (d, key) lexsort, including rows that
+    # take the fallback (k-th ties, inf padding, NaN) and C <= kk.
+    from geo_spark.operators.knn import _topk_order
+
+    rng = np.random.default_rng(57)
+    for trial in range(40):
+        n = int(rng.integers(1, 30))
+        c = int(rng.integers(1, 40))
+        kk = int(rng.integers(0, c + 3))
+        # coarse values make ties common, at the k-th column and elsewhere
+        d = rng.integers(0, 6, (n, c)).astype(np.float64) / 4.0
+        if trial % 2:
+            d += rng.uniform(0, 1e-3, (n, c))
+        key = rng.integers(0, 1_000, (n, c))
+        if n > 2 and 0 < kk < c:
+            # inject a tie at the k-th column: copy the kk-th value onward
+            r = int(rng.integers(0, n))
+            kth_col = np.argsort(d[r], kind="stable")[kk - 1]
+            d[r, rng.integers(0, c)] = d[r, kth_col]
+            d[0, : min(kk + 1, c)] = np.inf  # inf padding, as the merge uses
+            key[0, : min(kk + 1, c)] = np.iinfo(np.int64).max
+            d[1, rng.integers(0, c)] = np.nan
+        for k_arg in (key, key[0]):  # (n, C) and broadcast (C,) keys
+            full = np.lexsort((np.broadcast_to(k_arg, d.shape), d), axis=1)
+            np.testing.assert_array_equal(_topk_order(d, k_arg, kk), full[:, :kk])

@@ -53,6 +53,24 @@ def _drain(spark, tmp_path, frames, schema=None, **op_kwargs):
     return static, rows
 
 
+def _zigzag_fixes():
+    rows = [
+        # user 1: three fixes at ts=10 whose site order differs from
+        # their event_id order (site keys grow with lat/lng, so
+        # (ts, site) would visit A,B,C while event_id says B,C,A)
+        (1, 10, 101, 1.1, 1.1),  # B
+        (1, 10, 102, 2.1, 2.1),  # C
+        (1, 10, 103, 0.1, 0.1),  # A
+        (1, 11, 104, 3.1, 3.1),  # D
+        (1, 11, 105, 1.1, 1.1),  # B again (duplicate ts at 11 too)
+    ]
+    fx = pd.DataFrame(
+        rows, columns=["user_id", "ts_us", "event_id", "lat", "lng"]
+    )
+    schema = "user_id long, ts_us long, event_id long, lat double, lng double"
+    return fx, schema
+
+
 def test_drained_equals_batch(spark, tmp_path):
     fx = _fixes()
     # split mid-trail so linking must cross batch state
@@ -77,23 +95,10 @@ def test_drained_equals_batch(spark, tmp_path):
 def test_duplicate_ts_tiebreak_matches_batch(spark, tmp_path):
     """ADVICE r4: rows sharing a timestamp must link in the batch
     operator's (ts, event_id) order when the stream is given the same
-    tie-break column.  The zig-zag fixture below produces DIFFERENT
-    edge multisets under (ts, site) vs (ts, event_id) ordering, so a
-    wrong sort cannot pass."""
-    rows = [
-        # user 1: three fixes at ts=10 whose site order differs from
-        # their event_id order (site keys grow with lat/lng, so
-        # (ts, site) would visit A,B,C while event_id says B,C,A)
-        (1, 10, 101, 1.1, 1.1),  # B
-        (1, 10, 102, 2.1, 2.1),  # C
-        (1, 10, 103, 0.1, 0.1),  # A
-        (1, 11, 104, 3.1, 3.1),  # D
-        (1, 11, 105, 1.1, 1.1),  # B again (duplicate ts at 11 too)
-    ]
-    fx = pd.DataFrame(
-        rows, columns=["user_id", "ts_us", "event_id", "lat", "lng"]
-    )
-    schema = "user_id long, ts_us long, event_id long, lat double, lng double"
+    tie-break column.  The zig-zag fixture (_zigzag_fixes) produces
+    DIFFERENT edge multisets under (ts, site) vs (ts, event_id)
+    ordering, so a wrong sort cannot pass."""
+    fx, schema = _zigzag_fixes()
     static, drained = _drain(
         spark, tmp_path, [fx], schema=schema, tiebreak_col="event_id"
     )
@@ -129,6 +134,15 @@ def test_duplicate_ts_tiebreak_matches_batch(spark, tmp_path):
         for _ in range(int(n))
     )
     assert site_edges != want_edges
+
+
+def test_duplicate_ts_without_tiebreak_raises(spark, tmp_path):
+    """The zig-zag fixture of test_duplicate_ts_tiebreak_matches_batch
+    drained WITHOUT tiebreak_col: a repeated ts for one user must fail
+    the query, not link silently in (ts, site) order."""
+    fx, schema = _zigzag_fixes()
+    with pytest.raises(Exception, match="duplicate ts 10 for user 1"):
+        _drain(spark, tmp_path, [fx], schema=schema)
 
 
 def test_out_of_order_raises(spark, tmp_path):
