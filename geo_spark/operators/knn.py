@@ -585,6 +585,10 @@ def _knn_ring(
     # union); ring checkpoints retire two generations back.
     retirable_ab: DataFrame | None = None
     stale_ring: DataFrame | None = None
+    # a replaced frontier checkpoint is freed once the round's next ring
+    # materializes (the lazy ring semi-joins read it until then); the
+    # persisted pts is never freed here.
+    stale_front: DataFrame | None = None
     min_width = metric.MIN_WIDTH.value(level)
     # frontier size is tracked arithmetically (it only shrinks by the
     # done-key subtraction) so the loop never re-counts it: one driver
@@ -631,19 +635,26 @@ def _knn_ring(
         )
         n_done = done_keys.count()
         if n_done > 0:
-            # done_parts / the shrunken active_best / frontier are all
-            # single flat joins off checkpointed frames — leave them lazy
-            # (no checkpoint barrier); the next round's window job or the
-            # final union computes them exactly once where needed.
+            # done_parts and the shrunken active_best are single flat
+            # joins off checkpointed frames — leave them lazy (no
+            # checkpoint barrier); the next round's window job or the
+            # final union computes them exactly once where needed.  The
+            # frontier is re-read by every later round, so it is
+            # checkpointed: left lazy, each round replays the whole
+            # anti-join chain of the rounds before it.
             done_parts.append(active_best.join(done_keys, point_key, "semi"))
             retirable_ab = None  # captured by the done_part just appended
             active_best = active_best.join(done_keys, point_key, "left_anti")
-            frontier = frontier.join(done_keys, point_key, "left_anti")
             n_front -= n_done
             if n_front <= 0:
                 if stats is not None:
                     stats.append({"round": r, "sec": round(_time.time() - _t0, 3)})
                 break
+            if frontier is not pts:
+                stale_front = frontier
+            frontier = frontier.join(
+                done_keys, point_key, "left_anti"
+            ).localCheckpoint()
             # drop ring cells that no longer serve any active point
             ring = ring.join(
                 frontier.select("pcell").distinct(), "pcell", "semi"
@@ -685,6 +696,8 @@ def _knn_ring(
         # semi-join — best effort by design)
         free_local_checkpoint(stale_ring)
         stale_ring = prev_ring
+        free_local_checkpoint(stale_front)
+        stale_front = None
         prev_ring, ring = ring, nxt
         if stats is not None:
             stats.append({"round": r, "sec": round(_time.time() - _t0, 3)})

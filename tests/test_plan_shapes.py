@@ -93,6 +93,60 @@ def test_tile_pipeline_single_python_stage(spark, tmp_path):
     assert "HashAggregate" in plan
 
 
+def test_manifest_write_is_one_data_pass(spark, tmp_path, monkeypatch):
+    """A rollup write is two SQL executions, the write and the lineage
+    read-back: an emptiness pre-pass would be a third that scans and
+    encodes every input row and throws the result away."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from geo_spark.plans.manifest import verify_manifest, write_with_manifest
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids() -> set[int]:
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    def mtimes(root) -> dict:
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, files in os.walk(root)
+            for f in files
+        }
+
+    # a long bucket with small values: the read-back types it long, and
+    # verify_manifest's schema inference types it int
+    df = spark.range(0, 3000).withColumn("bucket", F.col("id") % 8)
+    out, manifest = str(tmp_path / "out"), str(tmp_path / "m.jsonl")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    conf_sets = []
+    monkeypatch.setattr(spark.conf, "set", lambda *a: conf_sets.append(a))
+
+    seen = max(execution_ids(), default=-1)
+    m = write_with_manifest(df, out, "bucket", manifest)
+    assert len({i for i in execution_ids() if i > seen}) == 2
+    assert sorted(m) == [str(b) for b in range(8)]
+    assert verify_manifest(spark, out, "bucket", manifest) == []
+    # the dynamic overwrite is scoped to the writer, never the session
+    assert conf_sets == []
+    assert spark.conf.get(key) == mode
+
+    # a complete manifest: returned unchanged, no file rewritten
+    before = mtimes(tmp_path)
+    assert write_with_manifest(df, out, "bucket", manifest) == m
+    assert mtimes(tmp_path) == before
+
+    # an empty input on a fresh path
+    fresh, fresh_manifest = str(tmp_path / "fresh"), str(tmp_path / "fresh.jsonl")
+    assert write_with_manifest(df.where("false"), fresh, "bucket", fresh_manifest) == {}
+    assert not os.path.exists(fresh_manifest)
+
+
 def test_knn_brute_plan_is_pure_map(spark):
     from geo_spark.operators.knn import _knn_brute
 

@@ -1,10 +1,14 @@
 """Streaming tile counts == batch tile counts; manifest write is
-idempotent and resumes exactly the missing buckets."""
+idempotent and resumes exactly the missing buckets, also after a crash
+before the manifest commit or with a torn manifest."""
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from geo_spark.functions import sql as s2sql
@@ -44,11 +48,29 @@ def test_stream_matches_batch(spark, tmp_path):
     assert len(got) > 10
 
 
+def _bucketed_events(spark):
+    ev = with_geo_noise(spark.range(0, 3000).withColumnRenamed("id", "event_id"), "event_id")
+    return ev.withColumn("bucket", (F.col("event_id") % 8).cast("int"))
+
+
+def _per_bucket(m: dict) -> dict:
+    return {b: (e["rows"], e["content_hash"]) for b, e in m.items()}
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, tmp_path_factory):
+    """One uninterrupted write of the 8-bucket events: (out, manifest, m)."""
+    d = tmp_path_factory.mktemp("clean")
+    out, manifest = str(d / "out"), str(d / "manifest.jsonl")
+    m = write_with_manifest(_bucketed_events(spark), out, "bucket", manifest)
+    assert len(m) == 8
+    return out, manifest, m
+
+
 def test_manifest_idempotent_resume(spark, tmp_path):
     out = str(tmp_path / "out")
     manifest = str(tmp_path / "manifest.jsonl")
-    ev = with_geo_noise(spark.range(0, 3000).withColumnRenamed("id", "event_id"), "event_id")
-    df = ev.withColumn("bucket", (F.col("event_id") % 8).cast("int"))
+    df = _bucketed_events(spark)
 
     m1 = write_with_manifest(df, out, "bucket", manifest)
     assert len(m1) == 8
@@ -60,8 +82,6 @@ def test_manifest_idempotent_resume(spark, tmp_path):
         shutil.rmtree(f"{out}/bucket={b}")
     kept = {k: v for k, v in m1.items() if k not in ("2", "5")}
     with open(manifest, "w") as f:
-        import json
-
         for e in kept.values():
             f.write(json.dumps(e) + "\n")
 
@@ -75,6 +95,78 @@ def test_manifest_idempotent_resume(spark, tmp_path):
     before = load_manifest(manifest)
     m3 = write_with_manifest(df, out, "bucket", manifest)
     assert m3 == before
+
+
+def test_manifest_crash_before_commit_resumes(spark, tmp_path, monkeypatch, clean_run):
+    from geo_spark.plans import manifest as manifest_mod
+
+    out = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest.jsonl")
+    df = _bucketed_events(spark)
+    write_with_manifest(df.where(~F.col("bucket").isin(2, 5)), out, "bucket", manifest)
+    with open(manifest, "rb") as f:
+        before = f.read()
+
+    # The crash: buckets 2 and 5 reach the output, the manifest commit
+    # does not.
+    real_replace = manifest_mod.os.replace
+    calls = []
+
+    def crash_once(src, dst):
+        calls.append(dst)
+        if len(calls) == 1:
+            raise OSError("crash before the manifest commit")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(manifest_mod.os, "replace", crash_once)
+    with pytest.raises(OSError, match="crash before the manifest commit"):
+        write_with_manifest(df, out, "bucket", manifest)
+    monkeypatch.undo()
+    assert calls == [manifest]
+    with open(manifest, "rb") as f:
+        assert f.read() == before
+    assert not os.path.exists(manifest + ".tmp")
+    assert set(load_manifest(manifest)) == {"0", "1", "3", "4", "6", "7"}
+
+    resumed = write_with_manifest(df, out, "bucket", manifest)
+    assert _per_bucket(resumed) == _per_bucket(clean_run[2])
+    assert _per_bucket(load_manifest(manifest)) == _per_bucket(clean_run[2])
+    assert verify_manifest(spark, out, "bucket", manifest) == []
+
+
+def test_manifest_torn_final_line_resumes(spark, tmp_path, clean_run):
+    clean_out, clean_manifest, clean = clean_run
+    out = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest.jsonl")
+    shutil.copytree(clean_out, out)
+    with open(clean_manifest) as f:
+        lines = f.readlines()
+    last = json.loads(lines[-1])
+    # a crash mid-append: the last entry stops halfway through its line
+    with open(manifest, "w") as f:
+        f.write("".join(lines[:-1]) + lines[-1][: len(lines[-1]) // 2])
+
+    loaded = load_manifest(manifest)
+    assert set(loaded) == set(clean) - {last["bucket"]}
+    assert _per_bucket(loaded) == {
+        b: v for b, v in _per_bucket(clean).items() if b != last["bucket"]
+    }
+
+    resumed = write_with_manifest(_bucketed_events(spark), out, "bucket", manifest)
+    assert _per_bucket(resumed) == _per_bucket(clean)
+    assert verify_manifest(spark, out, "bucket", manifest) == []
+
+
+def test_manifest_torn_interior_line_raises(tmp_path):
+    manifest = str(tmp_path / "manifest.jsonl")
+    good = [
+        json.dumps({"bucket": str(b), "rows": 3, "content_hash": "17"}) + "\n"
+        for b in range(3)
+    ]
+    with open(manifest, "w") as f:
+        f.write(good[0] + "\n" + good[1][:20] + "\n" + good[2])
+    with pytest.raises(ValueError, match="line 3 "):
+        load_manifest(manifest)
 
 
 def test_stream_dedup_matches_batch_distinct(spark, tmp_path):
